@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: both dimension joins broadcast (songs ~114k rows, users 50k
   * — far under the broadcast threshold; at 100 TB the fact side streams
   * through map-side hash joins with zero shuffle). The aggregations are
-  * hash aggregates with map-side partial combine; the mode/top-k kernels run
-  * on the *pre-aggregated* counts relation (|groups × distinct values|, not
-  * |rows| — see [[graft.operators.GroupTop]]).
+  * hash aggregates with map-side partial combine; the mode and top-k state is
+  * per (group, distinct value), never per row (Spark's `mode` buffer for
+  * genre KPIs, the pre-aggregated counts relation of
+  * [[graft.operators.GroupTop]] for hourly top-k).
   */
 object MusicKpis {
 
@@ -41,10 +42,16 @@ object MusicKpis {
       .withColumn("hour", hour(col(tsCol)))
 
   /** A1: per-(genre, date) KPIs — listen count, average duration, and the
-    * deterministic per-group mode of `modeCol` (reference `:185-196`).
+    * deterministic per-group mode of `modeCol` (reference `:185-196`), as
+    * ONE hash aggregate: Spark's `mode(col, deterministic = true)` ignores
+    * nulls, breaks ties toward the smallest value (pandas `mode()` sorts
+    * ascending) and yields NULL for a group whose `modeCol` is all null
+    * (pandas `mode()[0] if not empty else None`, reference `:190-193`).
+    * Its per-group buffer holds one count per distinct value, so the
+    * map-side partial aggregate stays |groups × distinct values|. The null
+    * genre is a group like any other — its mode included.
     *
-    * Output columns: genreCol, date, listen_count, avg_duration, top_<mode>
-    * (caller names the mode output via `modeOut`).
+    * Output columns: genreCol, date, listen_count, avg_duration, modeOut.
     *
     * `dropNullGroups = true` reproduces the reference's pandas
     * `groupby(dropna=True)` semantics (rows with a null genre — left-join
@@ -55,18 +62,13 @@ object MusicKpis {
       enriched: DataFrame,
       genreCol: String, countCol: String, avgCol: String, modeCol: String,
       modeOut: String = "most_popular",
-      dropNullGroups: Boolean = false): DataFrame = {
-    val base0 = if (dropNullGroups) enriched.filter(col(genreCol).isNotNull) else enriched
-    val kpis = base0
+      dropNullGroups: Boolean = false): DataFrame =
+    (if (dropNullGroups) enriched.filter(col(genreCol).isNotNull) else enriched)
       .groupBy(col(genreCol), col("date"))
       .agg(
         count(col(countCol)).as("listen_count"),
-        avg(col(avgCol)).as("avg_duration"))
-    val modes = GroupTop.mode(base0, Seq(genreCol, "date"), modeCol, modeOut)
-    // left join: all-null-mode groups keep a NULL mode (pandas `mode()[0] if
-    // not empty else None`, reference `:190-193`).
-    kpis.join(modes, Seq(genreCol, "date"), "left")
-  }
+        avg(col(avgCol)).as("avg_duration"),
+        mode(col(modeCol), deterministic = true).as(modeOut))
 
   /** A2: per-hour KPIs — exact distinct listeners, rank-ordered top-k values
     * as an array, and the diversity ratio distinct(trackCol)/count(*)

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -129,7 +130,22 @@ object Sources {
 
   def users(spark: SparkSession, path: String): DataFrame = csv(spark, usersSchema, path)
   def songs(spark: SparkSession, path: String): DataFrame = csv(spark, songsSchema, path)
-  def streams(spark: SparkSession, paths: String*): DataFrame = csv(spark, streamsSchema, paths: _*)
+  /** The shard glob is expanded here, on the driver: handed a literal
+    * glob, the reader probes it for a streaming-sink metadata directory and
+    * logs that probe's FileNotFoundException on every run. */
+  def streams(spark: SparkSession, paths: String*): DataFrame =
+    csv(spark, streamsSchema, expandGlobs(spark, paths): _*)
+
+  /** Each path's matches (Hadoop `globStatus`, sorted); a path that matches
+    * nothing is kept as given, so the read fails on it as it would have. */
+  private def expandGlobs(spark: SparkSession, paths: Seq[String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.flatMap { p =>
+      val path = new Path(p)
+      Option(path.getFileSystem(conf).globStatus(path)).filter(_.nonEmpty)
+        .fold(Seq(p))(_.toSeq.map(_.getPath.toString))
+    }
+  }
 
   // ---- JDBC relational source (reference S1/S2: Postgres extract at
   // `/root/reference/dags/music_streaming_etl_dags.py:96-102`, queries

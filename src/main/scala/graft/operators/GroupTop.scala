@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
 object GroupTop {
 
   /** Most frequent non-null `valueCol` per group; ties → smallest value.
-    * Groups whose `valueCol` is entirely null are dropped (pandas-mode
-    * parity for grouped KPIs is handled by callers via a left join back —
-    * see [[graft.etl.MusicKpis]]).
+    * Groups whose `valueCol` is entirely null are dropped. Where the mode
+    * sits beside other aggregates of the same groups, Spark's built-in
+    * `mode(col, deterministic = true)` gives the same answer inside that
+    * one aggregate, with all-null groups kept as NULL and no join back
+    * (which would lose a null group key) — see
+    * [[graft.etl.MusicKpis.genreKpis]].
     *
     * Output: groupCols :+ out.
     */

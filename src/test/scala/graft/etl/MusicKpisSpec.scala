@@ -54,6 +54,28 @@ class MusicKpisSpec extends SparkSpec {
     assert(k.contains(None))
   }
 
+  test("genreKpis: the null-genre group keeps its mode (ties → smallest value)") {
+    // t4/t5 are listed without a genre: named tracks in the null group
+    val genreless = songs.union(Seq(
+      ("t4", null, 400.0, "Song E", "Artist 3"),
+      ("t5", null, 500.0, "Song D", "Artist 3")
+    ).toDF("track_id", "track_genre", "duration_ms", "track_name", "artists"))
+    val plays = streams.union(Seq(
+      (1, "t4", ts("2024-06-25 12:00:00")),
+      (2, "t5", ts("2024-06-25 12:10:00"))
+    ).toDF("user_id", "track_id", "listen_time"))
+    val k = MusicKpis.genreKpis(
+        MusicKpis.enrich(plays, genreless, "track_id", users, "user_id", "listen_time"),
+        genreCol = "track_genre", countCol = "track_id", avgCol = "duration_ms",
+        modeCol = "track_name", modeOut = "most_popular_track")
+      .filter($"track_genre".isNull).collect()
+    assert(k.length == 1)
+    // tX (no song row) adds a null track_name, which the mode ignores;
+    // Song D and Song E tie at one play each
+    assert(k.head.getAs[Long]("listen_count") == 3)
+    assert(k.head.getAs[String]("most_popular_track") == "Song D")
+  }
+
   test("genreKpis dropNullGroups reproduces pandas dropna semantics") {
     val k = MusicKpis.genreKpis(enriched,
       genreCol = "track_genre", countCol = "track_id", avgCol = "duration_ms",

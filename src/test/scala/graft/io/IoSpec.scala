@@ -55,6 +55,46 @@ class IoSpec extends SparkSpec {
     assert(quarantined.exists(_.contains("junk_age")))
   }
 
+  /** Formatted messages `loggerName` logs at WARN or above during `body`. */
+  private def warnings(loggerName: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try body
+    finally { logger.setLevel(level); logger.removeAppender(appender); appender.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("streams glob is expanded on the driver: every shard is read, no metadata probe") {
+    val dir = Files.createTempDirectory("graft-io-glob")
+    for (i <- 1 to 2)
+      Files.writeString(dir.resolve(s"streams$i.csv"),
+        s"user_id,track_id,listen_time\n$i,t$i,2024-06-25T10:00:00.000Z\n")
+    val logged = warnings("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink") {
+      val streams = Sources.streams(spark, dir.resolve("streams*.csv").toString)
+      assert(streams.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+    }
+    assert(logged.isEmpty, logged)
+  }
+
+  test("a streams glob that matches nothing still fails the read") {
+    val dir = Files.createTempDirectory("graft-io-noglob")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Sources.streams(spark, dir.resolve("streams*.csv").toString)
+    }
+    assert(e.getMessage.contains("streams*.csv"), e.getMessage)
+  }
+
   test("renameColumns bridges source names to warehouse names") {
     import spark.implicits._
     val df = Seq((1, 2)).toDF("key", "mode")
